@@ -96,11 +96,8 @@ def _local_rows_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     IEEE correctly-rounded parsing), strings escape backslash+quote,
     NULLs cast to the column type. Only the declared output types
     (BIGINT/DOUBLE/STRING/DATE/BOOLEAN) are rendered; anything else
-    falls back to createDataFrame unchanged."""
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().rsplit(" ", 1)
-        fields.append((name.strip(), typ.strip().upper()))
+    falls back to createDataFrame unchanged — including a DDL the
+    naive comma split below cannot parse (``decimal(18,6)``)."""
     if not rows:
         return spark.createDataFrame([], ddl)
 
@@ -116,11 +113,16 @@ def _local_rows_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
         if typ == "STRING":
             s = str(v).replace("\\", "\\\\").replace("'", "\\'")
             return f"'{s}'"
-        if typ == "DATE":
-            return f"DATE'{v.isoformat()}'"
-        raise TypeError(typ)
+        return f"DATE'{v.isoformat()}'"
 
     try:
+        fields = []
+        for part in ddl.split(","):
+            name, typ = part.strip().rsplit(" ", 1)
+            typ = typ.strip().upper()
+            if typ not in ("BIGINT", "DOUBLE", "BOOLEAN", "STRING", "DATE"):
+                raise TypeError(typ)
+            fields.append((name.strip(), typ))
         tuples = [
             "(" + ", ".join(
                 lit(v, fields[i][1]) for i, v in enumerate(tuple(r))

@@ -17,7 +17,7 @@ Scale design (the point of this module):
   int in both engines (Spark LongType; DuckDB BIGINT errors on unsigned
   overflow where Spark wraps) — 15 hex chars of md5 is the widest
   portable hash. The 15-bit band keyspace (32,768 values) keeps buckets
-  at ~N/32768 so the within-bucket self-join stays near-linear; the old
+  at ~N/32768 so the per-bucket pair explode stays near-linear; the old
   32-bit/4×8-bit layout (256-value keyspace) was quadratic at scale.
 - **n-gram Jaccard**: exact verification metric used by both LSH paths.
 
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as _st
 
 from amadeus_spark.cache import tracked_persist
+from amadeus_spark.operators.joins import bucket_pairs
 
 # ---- shared constants (Spark exprs AND DuckDB oracle use these) ----------
 SHINGLE_K = 3
@@ -176,9 +177,9 @@ def with_minhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         *aggs, F.array_distinct(F.collect_list("h")).alias("sh")
     )
     sig_cols = ", ".join(f"sig_{i}" for i in range(NUM_HASHES))
-    # persist: the signature frame feeds both sides of the LSH band
-    # self-join AND the verification joins (4 consumers) — without it
-    # Spark recomputes the whole shingle+hash subtree per consumer.
+    # persist: the signature frame feeds the LSH band stage AND both
+    # verification joins (3 consumers) — without it Spark recomputes
+    # the whole shingle+hash subtree per consumer.
     # State is one row per doc (64 ints + shingles); at 100 TB use
     # DISK_ONLY or write it out as an intermediate table.
     return tracked_persist(grouped.select(
@@ -197,16 +198,17 @@ def minhash_lsh_pairs(
     Jaccard. Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
 
     Physical plan at scale: project sig per doc → explode 16 band hashes
-    → shuffle on (band_id, band_hash) → per-bucket self-join emits
-    candidates → distinct → join back to shingle arrays (shuffle on id)
-    → exact verify. No O(n²) stage anywhere; skewed buckets (boilerplate
-    docs) are the known hot spot — AQE skew-join splits them, and
-    ``max_bucket_size`` is the hard cap: band buckets holding more than
-    that many docs are dropped whole before the self-join (a bucket of
-    d docs emits O(d²) candidate pairs — one boilerplate bucket can
-    dominate the stage at corpus scale). Dropping a bucket only loses
-    recall for pairs whose OTHER 15 bands also miss; the oracle applies
-    the identical cap so parity stays exact. None = off.
+    → ``bucket_pairs``: one shuffle on (band_id, band_hash) groups each
+    bucket into a doc list and the candidate pairs explode out of it →
+    distinct → join back to shingle arrays (shuffle on id) → exact
+    verify. No O(n²) stage anywhere; skewed buckets (boilerplate docs)
+    are the known hot spot, and ``max_bucket_size`` is the hard cap:
+    band buckets holding more than that many docs are dropped whole
+    before any pair is emitted (a bucket of d docs emits O(d²)
+    candidate pairs — one boilerplate bucket can dominate the stage at
+    corpus scale). Dropping a bucket only loses recall for pairs whose
+    OTHER 15 bands also miss; the oracle applies the identical cap so
+    parity stays exact. None = off.
     """
     docs = with_minhash(df, id_col, text_col)
     band_s, _ = band_hashes_frag("sig")
@@ -216,37 +218,7 @@ def minhash_lsh_pairs(
             "band_id", "bh"
         ),
     )
-    # Bucket-group pair generation instead of a bands⋈bands self-join:
-    # the join's two inputs each recomputed the 16-md5 band subtree
-    # from the cached signatures (one side rebuilt it under its
-    # BroadcastExchange — no exchange reuse), and the bucket cap paid a
-    # Window pass on top. ONE groupBy computes the bands once, the cap
-    # becomes a size() filter on the grouped list (the Window stage
-    # disappears), and the per-bucket pairs explode out of the list —
-    # same O(d²)-per-bucket output, one Exchange in place of
-    # join+window+broadcast (guide §2.4). Memory note: a bucket's doc
-    # list materializes in the agg buffer, the same rows the old
-    # window buffered per partition; max_bucket_size remains the
-    # at-scale guard, applied before any pair is emitted.
-    buckets = bands.groupBy("band_id", "bh").agg(
-        F.collect_list("doc").alias("ds")
-    )
-    size_ok = F.size("ds") >= 2
-    if max_bucket_size is not None:
-        size_ok = size_ok & (F.size("ds") <= max_bucket_size)
-    cand = (
-        buckets.where(size_ok)
-        .select(F.posexplode("ds").alias("__i", "__da"), "ds")
-        .select(
-            "__da",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__db"),
-        )
-        .select(
-            F.least("__da", "__db").alias("doc_a"),
-            F.greatest("__da", "__db").alias("doc_b"),
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(bands, ["band_id", "bh"], "doc", cap=max_bucket_size)
     sh = docs.select(F.col(id_col).alias("doc"), "sh")
     verified = (
         cand.join(sh.withColumnRenamed("doc", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
@@ -366,8 +338,8 @@ def simhash_pairs(
     bit_count(simhash_a XOR simhash_b) ≤ max_hamming, top ``limit`` by
     (hamming, doc_a, doc_b). Banding keeps it one shuffle keyed by band
     value; the 32,768-value band keyspace holds buckets to ~N/32768 so
-    the within-bucket self-join stays near-linear in N (the candidate-
-    linearity property test pins this)."""
+    the per-bucket pair explode (``bucket_pairs``) stays near-linear in
+    N (the candidate-linearity property test pins this)."""
     th_s, _ = token_hashes_frag(text_col)
     # explode + codegen'd sums (same rationale as with_minhash): per bit,
     # majority test 2*sum(bit) > n; HOF filter×60 measured ~4× slower
@@ -386,8 +358,8 @@ def simhash_pairs(
     # from the groupBy; the oracle assigns them sh=0 (no bit has a
     # majority over zero tokens) — re-attach them so parity holds.
     all_ids = df.select(F.col(id_col).alias("doc"))
-    # no persist: since the bucket-group candidate shape (below) the
-    # signature frame feeds exactly one consumer
+    # no persist: the signature frame feeds exactly one consumer (the
+    # band stage)
     docs = all_ids.join(sigs, "doc", "left").withColumn(
         "sh", F.coalesce("sh", F.lit(0))
     )
@@ -405,34 +377,9 @@ def simhash_pairs(
             )
         ).alias("band_id", "band_val"),
     )
-    # bucket-group pair generation (r16, the minhash_lsh_pairs shape):
-    # one groupBy computes the band subtree once where the self-join
-    # scanned it per side; per-bucket pairs explode from the grouped
-    # list (~N/32768 docs per bucket, near-linear as before)
-    buckets = bands.groupBy("band_id", "band_val").agg(
-        F.collect_list(F.struct("doc", "sh")).alias("ds")
-    )
-    cand = (
-        buckets.where(F.size("ds") >= 2)
-        .select(F.posexplode("ds").alias("__i", "__x"), "ds")
-        .select(
-            "__x",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__y"),
-        )
-        .select(
-            F.least(F.col("__x.doc"), F.col("__y.doc")).alias("doc_a"),
-            F.greatest(F.col("__x.doc"), F.col("__y.doc")).alias("doc_b"),
-            F.when(
-                F.col("__x.doc") < F.col("__y.doc"), F.col("__x.sh")
-            ).otherwise(F.col("__y.sh")).alias("sa"),
-            F.when(
-                F.col("__x.doc") < F.col("__y.doc"), F.col("__y.sh")
-            ).otherwise(F.col("__x.sh")).alias("sb"),
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(bands, ["band_id", "band_val"], "doc", payload=["sh"])
     return (
-        cand.withColumn("hamming", F.expr("bit_count(sa ^ sb)"))
+        cand.withColumn("hamming", F.expr("bit_count(sh_a ^ sh_b)"))
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
         .orderBy("hamming", "doc_a", "doc_b")
@@ -526,13 +473,8 @@ def ngram_jaccard_pairs(
         )
     shared = counts.filter(F.col("df") >= 2).select("h")
     ex2 = ex.join(shared, "h")
-    # NOTE (r16): the bucket-group pair rewrite that paid off for the
-    # banded LSH family (minhash/simhash/fuzzy/embedding) measured
-    # WORSE here at 10x scale (20.4 s vs 14.5 s, perturbed scale
-    # probe) — ngram's pair multiset is far denser (every shared
-    # shingle hash contributes pairs that only feed a COUNT), and the
-    # self-join's streamed partial aggregation beats materializing
-    # per-hash doc lists. The join shape stays.
+    # not bucket_pairs: the bucket-group shape measured WORSE here at
+    # 10x (its docstring has the numbers) — the join shape stays
     inter = (
         ex2.alias("a")
         .join(ex2.alias("b"), on=[F.col("a.h") == F.col("b.h"), F.col("a.doc") < F.col("b.doc")])

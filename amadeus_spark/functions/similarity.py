@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from amadeus_spark.cache import tracked_persist
+from amadeus_spark.operators.joins import bucket_pairs
 
 EMB_DIM = 64
 N_PLANES = 8
@@ -231,13 +232,14 @@ def embedding_neardup_pairs(
 
     Physical plan at scale: project ND_BANDS bucket ids per vector →
     posexplode to (id, band_id, bucket) — ids only, vectors never ride
-    the band shuffle → per-bucket self-join emits candidates → distinct
-    → join vectors back (shuffle on id) → exact cosine verify. The old
-    ``id_a < id_b`` non-equi join planned as BroadcastNestedLoopJoin,
-    O(n²) pairs; this is equi-joined and near-linear. A pair is missed
-    only when ALL ND_BANDS band buckets differ — probability
-    (1-p^ND_BITS)^ND_BANDS, vanishing for true near-dups. The DuckDB
-    oracle applies the identical banding so parity stays exact.
+    the band shuffle → ``bucket_pairs`` explodes each bucket's id list
+    into candidates → distinct → join vectors back (shuffle on id) →
+    exact cosine verify. The old ``id_a < id_b`` non-equi join planned
+    as BroadcastNestedLoopJoin, O(n²) pairs; this is equi-joined and
+    near-linear. A pair is missed only when ALL ND_BANDS band buckets
+    differ — probability (1-p^ND_BITS)^ND_BANDS, vanishing for true
+    near-dups. The DuckDB oracle applies the identical banding so
+    parity stays exact.
 
     vec_id % id_mod == 0 sampling keeps the sf0.01 oracle cheap."""
     base = tracked_persist(with_norm(
@@ -250,35 +252,7 @@ def embedding_neardup_pairs(
             "band_id", "bucket"
         ),
     )
-    # bucket-group pair generation (r16, the minhash_lsh_pairs shape):
-    # the self-join evaluated the 32 interpreted band-projection HOFs
-    # on BOTH sides (r15's persist attempt was worse — the cache
-    # barrier cost more than it saved; this computes them once with no
-    # cache at all), and the skew-guard Window folds into a size()
-    # filter on the grouped list before any pair is emitted. Ids only
-    # ride the lists — the vector-carrying twin of this rewrite in
-    # semantic_dedup_stats measured WORSE and was reverted (r16
-    # negative: collect_list of embeddings + sorted slice costs more
-    # than the cell self-join it replaces at sampled-cell scale).
-    buckets = bands.groupBy("band_id", "bucket").agg(
-        F.collect_list("id").alias("ds")
-    )
-    size_ok = F.size("ds") >= 2
-    if max_bucket_size is not None:
-        size_ok = size_ok & (F.size("ds") <= max_bucket_size)
-    cand = (
-        buckets.where(size_ok)
-        .select(F.posexplode("ds").alias("__i", "__xa"), "ds")
-        .select(
-            "__xa",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__xb"),
-        )
-        .select(
-            F.least("__xa", "__xb").alias("id_a"),
-            F.greatest("__xa", "__xb").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(bands, ["band_id", "bucket"], "id", cap=max_bucket_size)
     va = base.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("norm").alias("na")
     )

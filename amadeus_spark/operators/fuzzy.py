@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from amadeus_spark.operators.joins import bucket_pairs
+
 
 def deletion_variants_frag(col_sql: str, dialect: str, depth: int = 1) -> str:
     """Array of {identity} ∪ {≤ depth-deletion variants} of a string
@@ -442,39 +444,9 @@ def fuzzy_self_join(
         F.col(name_col).alias("n"),
         F.explode(F.array_distinct(F.expr(v))).alias("v"),
     ).select("k", "n", F.xxhash64("v").alias("hv"))
-    # Bucket-group pair generation instead of a vars⋈vars self-join
-    # (r16, the minhash_lsh_pairs shape): the join scanned the variant
-    # subtree twice (hence the old persist), shuffled both sides, and
-    # still needed the trailing distinct. ONE groupBy(hv) computes the
-    # variants once — the persist disappears with the second consumer —
-    # and per-bucket pairs explode out of the grouped list: same
-    # O(d²)-per-bucket candidates, one Exchange in place of two plus a
-    # cache round trip (guide §2.4). Two rows of one key can share a
-    # bucket only through a cross-variant hash collision — the k1!=k2
-    # guard keeps them out, exactly like the old a.k < b.k condition.
-    buckets = vars_df.groupBy("hv").agg(
-        F.collect_list(F.struct("k", "n")).alias("ds")
-    )
-    cand = (
-        buckets.where(F.size("ds") >= 2)
-        .select(F.posexplode("ds").alias("__i", "__x"), "ds")
-        .select(
-            "__x",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__y"),
-        )
-        .where(F.col("__x.k") != F.col("__y.k"))
-        .select(
-            F.least(F.col("__x.k"), F.col("__y.k")).alias("k1"),
-            F.greatest(F.col("__x.k"), F.col("__y.k")).alias("k2"),
-            F.when(
-                F.col("__x.k") < F.col("__y.k"), F.col("__x.n")
-            ).otherwise(F.col("__y.n")).alias("n1"),
-            F.when(
-                F.col("__x.k") < F.col("__y.k"), F.col("__y.n")
-            ).otherwise(F.col("__x.n")).alias("n2"),
-        )
-        .distinct()
-    )
+    # two variants of one key can share a bucket only through a
+    # cross-variant hash collision — bucket_pairs' id guard drops them
+    cand = bucket_pairs(vars_df, ["hv"], "k", payload=["n"])
     # Two measured traps (2.7× combined, sf0.1 customer names):
     # 1. threshold-banded levenshtein(n1, n2, d) early-exits rows far
     #    apart (returns -1) instead of filling the full DP matrix;
@@ -486,11 +458,11 @@ def fuzzy_self_join(
     #    above the Project without changing its result; the plan test
     #    asserts no levenshtein ever appears in a join condition.
     verified = cand.select(
-        "k1",
-        "k2",
-        "n1",
-        "n2",
-        F.expr(f"levenshtein(n1, n2, {max_dist})").alias("dist"),
+        F.col("k_a").alias("k1"),
+        F.col("k_b").alias("k2"),
+        F.col("n_a").alias("n1"),
+        F.col("n_b").alias("n2"),
+        F.expr(f"levenshtein(n_a, n_b, {max_dist})").alias("dist"),
     )
     never = F.monotonically_increasing_id() < 0
     return verified.filter((F.col("dist") >= 0) | never)

@@ -242,3 +242,71 @@ def temporal_join(
     return asof_join(
         fact, versions, on_keys, fact_time, version_start, direction="backward"
     )
+
+
+def bucket_pairs(
+    df: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    payload: Sequence[str] = (),
+    cap: int | None = None,
+) -> DataFrame:
+    """Every pair of rows sharing a bucket (equal ``keys``) — the
+    candidate stage of the banded near-dup operators (minhash, simhash,
+    fuzzy deletion blocking, embedding LSH).
+
+    Returns ``{id_col}_a, {id_col}_b`` plus ``{p}_a, {p}_b`` for each
+    ``payload`` column, distinct, with ``{id_col}_a < {id_col}_b`` and
+    each payload value kept with its own id. Rows with EQUAL ids never
+    pair: a repeated id (or two blocking variants of one key colliding
+    in a bucket) is not a candidate. ``cap`` drops buckets holding more
+    than that many rows whole, before any pair is emitted (None = off).
+
+    Plan: ONE groupBy collects each bucket into the list ``ds`` and the
+    pairs explode out of it (posexplode + slice) — one Exchange, where a
+    ``bucket ⋈ bucket`` self-join computed the bucket subtree once per
+    side and shuffled both. Output is O(d²) per bucket of d rows either
+    way; the list sits in one agg buffer, so ``cap`` is the at-scale
+    guard against a hot bucket. Without payload the list holds bare ids.
+
+    Two pair generators stay on their self-join because the bucket-group
+    measured WORSE there (OPTIMIZATION_r16): ngram_jaccard_pairs (a far
+    denser pair multiset that only feeds a COUNT — the join's streamed
+    partial aggregation beat per-hash doc lists, 20.4 s vs 14.5 s on the
+    perturbed 10× probe) and semantic_dedup_stats (its lists would carry
+    the embeddings; collecting vectors cost more than the cell self-join
+    at sampled-cell scale)."""
+    cols = [id_col, *payload]
+    elem = F.struct(*cols) if payload else F.col(id_col)
+    size_ok = F.size("ds") >= 2
+    if cap is not None:
+        size_ok = size_ok & (F.size("ds") <= cap)
+    x_id, y_id = (
+        (F.col(f"__x.{id_col}"), F.col(f"__y.{id_col}"))
+        if payload
+        else (F.col("__x"), F.col("__y"))
+    )
+    # least/greatest order whole elements: ids differ after the filter
+    # and lead each struct, so the id alone decides which side is _a
+    pairs = (
+        df.groupBy(*keys)
+        .agg(F.collect_list(elem).alias("ds"))
+        .where(size_ok)
+        .select(F.posexplode("ds").alias("__i", "__x"), "ds")
+        .select(
+            "__x",
+            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__y"),
+        )
+        .where(x_id != y_id)
+        .select(
+            F.least("__x", "__y").alias("__lo"),
+            F.greatest("__x", "__y").alias("__hi"),
+        )
+    )
+    if not payload:
+        out = [F.col("__lo").alias(f"{id_col}_a"), F.col("__hi").alias(f"{id_col}_b")]
+    else:
+        out = [F.col(f"__lo.{c}").alias(f"{c}_a") for c in cols] + [
+            F.col(f"__hi.{c}").alias(f"{c}_b") for c in cols
+        ]
+    return pairs.select(*out).distinct()

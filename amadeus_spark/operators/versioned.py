@@ -147,11 +147,9 @@ def _fuse_ok(root: str) -> bool:
     a cheap METADATA move on local/HDFS-like filesystems, so one Spark
     job can stage both halves under a tag partition and the driver
     renames them into place. Object stores rename by COPY — they keep
-    the two-write path. Env kill-switch for debugging only."""
+    the two-write path."""
     scheme = root.split("://", 1)[0] if "://" in root else ""
-    return scheme in ("", "file", "hdfs") and os.environ.get(
-        "AMADEUS_FUSE_CDF", "1"
-    ) != "0"
+    return scheme in ("", "file", "hdfs")
 
 
 def _fused_write(

@@ -3,6 +3,8 @@ reproduces the original failure scenario."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,3 +125,20 @@ def test_connected_components_raises_on_non_convergence(spark):
     assert {(r.id, r.cluster) for r in fast.collect()} == {
         (i, 1) for i in range(1, 6)
     }
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        ("k bigint, amt decimal(18,6)", [(1, Decimal("1.500000"))]),
+        ("k bigint, s struct<x: bigint, y: bigint>", [(1, None)]),
+    ],
+    ids=["decimal", "struct_null"],
+)
+def test_local_rows_df_comma_bearing_type_falls_back(spark, ddl, rows):
+    """A type with a comma inside splits the naive DDL parse; the
+    result must come from the createDataFrame fallback, not raise."""
+    import __spark_entry__ as entrymod
+
+    out = entrymod._local_rows_df(spark, rows, ddl)
+    assert [tuple(r) for r in out.collect()] == rows
