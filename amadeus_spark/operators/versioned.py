@@ -50,8 +50,10 @@ files:
   a 1%-of-keys update rewrites ~1% of files; untouched files are
   carried into the new snapshot BY REFERENCE (zero data movement,
   zero manifest bytes — they are simply not removed);
-- DELETE/UPDATE also come in MERGE-ON-READ form (``mode="dv"`` —
-  Delta's deletion vectors): the matched rows' physical identities
+- predicate DELETE/UPDATE run through ONE leg (:func:`_predicate_dml`
+  — a DELETE is an UPDATE with no post-image), copy-on-write or
+  MERGE-ON-READ (``mode="dv"`` — Delta's deletion vectors); in the
+  latter the matched rows' physical identities
   ((commit dir, file, row_index)) land in a parquet under
   ``root/_deletion_vectors/`` and the touched entries re-commit by
   reference with the DV attached; every reader goes through ONE
@@ -1760,16 +1762,26 @@ def _rebase_prev(
 
 
 def _restamp_cdf(
-    spark: SparkSession, root: str, old_dir: str, new_version: int
+    spark: SparkSession, root: str, old_dir: str, new_version: int, man: dict
 ) -> str:
     """Re-stamp a staged changefeed directory for a re-based commit:
     change rows carry ``_commit_version`` IN the data (the streaming
     contract), so a loser re-publishing at a bumped version must
     rewrite them — O(change batch), still far cheaper than re-running
     the upstream job. Writes a fresh version-stamped dir and drops the
-    stale one."""
+    stale one. The staged dir is read through ``man``'s physical schema
+    (as :func:`table_changes` reads it): an empty change leg stages a
+    dir with no files, so there is no footer to infer one from."""
     new_dir = f"v{new_version}-{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(f"{root}/{CDF_DIR}/{old_dir}").withColumn(
+    rd = spark.read
+    schema = _physical_schema(man)
+    if schema is not None:
+        rd = rd.schema(
+            schema.add("_change_type", _st.StringType()).add(
+                "_commit_version", _st.LongType()
+            )
+        )
+    rd.parquet(f"{root}/{CDF_DIR}/{old_dir}").withColumn(
         "_commit_version", F.lit(new_version)
     ).write.mode("errorifexists").parquet(f"{root}/{CDF_DIR}/{new_dir}")
     fs, _ = _hadoop_fs(spark, root)
@@ -1910,8 +1922,8 @@ def _commit(
                 *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
             )
     # data + change rows FUSE into one write job when the commit has
-    # both and renames are cheap (guide §2.4; see _fused_write) — the
-    # write itself then happens in the cdf block below. The reserved
+    # both and renames are cheap (guide §2.4; see _fused_write) — that
+    # one job then stages both legs in the data block below. The reserved
     # column names must be free on BOTH frames (a physical table
     # column named like them would corrupt the union's alignment).
     fuse_cdf = (
@@ -1923,8 +1935,28 @@ def _commit(
             & (set(df.columns) | (set(cdf.columns) - {"_change_type"}))
         )
     )
-    if df is not None and not fuse_cdf:
-        df.write.mode("errorifexists").parquet(commit_dir)
+    # the change leg's staging dir and stamped frame are shared by the
+    # fused write below and the plain CDF write after it
+    cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
+
+    def stamped(frame: DataFrame) -> DataFrame:
+        if mapping and any(c in mapping for c in frame.columns):
+            # change files store PHYSICAL names too (the from_add path
+            # already does: it re-reads the committed files) — a feed
+            # spanning a rename unifies on the stable physical name
+            frame = frame.select(
+                *[F.col(c).alias(mapping.get(c, c)) for c in frame.columns]
+            )
+        return frame.withColumn("_commit_version", F.lit(version))
+
+    if df is not None:
+        if fuse_cdf:
+            _fused_write(
+                spark, df, stamped(cdf), commit_dir,
+                f"{root}/{CDF_DIR}/{cdf_dir}",
+            )
+        else:
+            df.write.mode("errorifexists").parquet(commit_dir)
         fresh = _file_entries(commit_dir, stats_cols)
         new_files = new_files + fresh
         if bloom_spec and bloom_spec.get("cols"):
@@ -1972,32 +2004,8 @@ def _commit(
             else None
         )
     if cdf is not None:
-        cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
-        if mapping and any(c in mapping for c in cdf.columns):
-            # change files store PHYSICAL names too (the from_add path
-            # already does: it re-reads the committed files) — a feed
-            # spanning a rename unifies on the stable physical name
-            cdf = cdf.select(
-                *[F.col(c).alias(mapping.get(c, c)) for c in cdf.columns]
-            )
-        cdf_full = cdf.withColumn("_commit_version", F.lit(version))
-        if fuse_cdf:
-            _fused_write(
-                spark, df, cdf_full, commit_dir,
-                f"{root}/{CDF_DIR}/{cdf_dir}",
-            )
-            fresh = _file_entries(commit_dir, stats_cols)
-            new_files = new_files + fresh
-            if bloom_spec and bloom_spec.get("cols"):
-                _write_bloom_sidecar(
-                    spark, root, commit_dir, bloom_spec, fresh,
-                    _physical_schema(
-                        {"schema": schema_json, "column_mapping": mapping}
-                    ),
-                    set(df.columns),
-                )
-        else:
-            cdf_full.write.mode("errorifexists").parquet(
+        if not fuse_cdf:
+            stamped(cdf).write.mode("errorifexists").parquet(
                 f"{root}/{CDF_DIR}/{cdf_dir}"
             )
         cdf_mark = {"dir": cdf_dir}
@@ -2198,7 +2206,8 @@ def _commit(
             if isinstance(cdf_mark, dict):
                 cdf_mark = {
                     "dir": _restamp_cdf(
-                        spark, root, cdf_mark["dir"], version
+                        spark, root, cdf_mark["dir"], version,
+                        {"schema": schema_json, "column_mapping": mapping},
                     )
                 }
             manifest["version"] = version
@@ -2613,84 +2622,14 @@ def commit_delete_where(
         raise FileNotFoundError(f"no versioned table at {root}")
     res = _resolve(spark, root, cur)
     seg = res["seg"]
-    pred = F.expr(predicate)
     # only the DV leg re-ADDS entries (stats must carry); the rewrite
     # leg reads/removes them — identity/rows/dv suffice (slim skips
     # deserializing the per-file stats maps through a checkpoint index)
     refs = _pruned_entries(spark, root, res, slim=(mode != "dv"))
-    if mode == "dv":
-        return _delete_where_dv(
-            spark, root, cur, seg, refs, pred, changefeed,
-            conflict=_predicate_conflict(seg, predicate),
-        )
-    return _delete_where_rewrite(
-        spark, root, cur, seg, refs, pred, changefeed,
-        conflict=_predicate_conflict(seg, predicate),
+    return _predicate_dml(
+        spark, root, cur, seg, refs, F.expr(predicate), mode, changefeed,
+        _predicate_conflict(seg, predicate),
     )
-
-
-def _delete_where_rewrite(
-    spark: SparkSession,
-    root: str,
-    cur: int,
-    seg: dict,
-    refs: list[dict],
-    pred,
-    changefeed: bool,
-    conflict: dict | None = None,
-) -> tuple[int, int, int, int]:
-    """The copy-on-write DELETE leg over a candidate set: find the
-    files holding ≥1 matching row, rewrite only them keeping their
-    non-matching rows, carry everything else by reference (shared by
-    :func:`commit_delete_where` — full candidate set — and
-    :func:`commit_delete_keys` — index-pruned candidates)."""
-    touched = _touched_by_predicate(spark, root, seg, refs, pred)
-    if not touched:
-        # carried = the WHOLE snapshot (refs may be a pruned subset)
-        return cur, 0, seg["total_files"], 0
-    n_kept = seg["total_files"] - len(touched)
-    touched_read = _snapshot_read(spark, root, seg, touched)
-    keep = touched_read.where(~F.coalesce(pred, F.lit(False)))
-    cached = []
-    cdf_frame = None
-    try:
-        if changefeed:
-            touched_read = touched_read.persist()
-            cached.append(touched_read)
-            keep = touched_read.where(~F.coalesce(pred, F.lit(False)))
-            cdf_frame = touched_read.where(pred).withColumn(
-                "_change_type", F.lit("delete")
-            )
-        v = _commit(
-            spark,
-            root,
-            keep,
-            "delete",
-            seg["stats_cols"],
-            # a DELETE writes only pass-through survivors — rows that
-            # passed CHECK at their original write; nothing to enforce
-            pre_checked=True,
-            removes=_rm(touched),
-            removed_rows=_nrows(touched),
-            removed_dv=_dv_debit(touched),
-            prev=seg,
-            cdf=cdf_frame,
-            # simple predicates classify: a racing APPEND whose stats
-            # refute the predicate re-bases this delete instead of
-            # recomputing it (see _rebase_ok kind="predicate");
-            # keyed deletes classify as kind="pruned" on their range
-            conflict=conflict,
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
-    # count from THIS commit's own entries (touched minus kept-rows
-    # written) — rebase-proof, unlike a stale-snapshot totals diff
-    # (a re-based loser's final total also carries the winner's adds)
-    n_deleted = _nrows(touched) - sum(
-        e["rows"] for e in _read_manifest(spark, root, v).get("add", [])
-    )
-    return v, len(touched), n_kept, n_deleted
 
 
 def commit_delete_keys(
@@ -2753,9 +2692,6 @@ def commit_delete_keys(
             spark, root, refs, phys, keys,
             schema[key_col].dataType if schema else None,
         )
-    if not refs:
-        return cur, 0, seg["total_files"], 0
-    pred = F.col(key_col).isin(keys)
     conflict = (
         {
             "kind": "pruned", "read": [list(r) for r in _rm(refs)],
@@ -2764,13 +2700,9 @@ def commit_delete_keys(
         if lo is not None
         else None
     )
-    if mode == "dv":
-        return _delete_where_dv(
-            spark, root, cur, seg, refs, pred, changefeed,
-            conflict=conflict,
-        )
-    return _delete_where_rewrite(
-        spark, root, cur, seg, refs, pred, changefeed, conflict=conflict
+    return _predicate_dml(
+        spark, root, cur, seg, refs, F.col(key_col).isin(keys), mode,
+        changefeed, conflict,
     )
 
 
@@ -2781,12 +2713,13 @@ def _stage_dv(
     refs: list[dict],
     matched: DataFrame,
 ) -> tuple[list[dict], dict, str, list[dict]] | None:
-    """Shared deletion-vector staging for the DV DELETE/UPDATE legs:
-    from the persisted ``matched`` frame (identity columns attached),
-    derive the per-file match counts, resolve the touched entries,
-    WRITE the fresh DV parquet (this commit's matches unioned with the
-    touched files' existing DV rows — each entry points at exactly ONE
-    dv dir), and build the re-add entries with rows debited and the DV
+    """Deletion-vector staging shared by the DV leg of
+    :func:`_predicate_dml` and by :func:`commit_merge`: from the
+    persisted ``matched`` frame (identity columns attached), derive
+    the per-file match counts, resolve the touched entries, WRITE the
+    fresh DV parquet (this commit's matches unioned with the touched
+    files' existing DV rows — each entry points at exactly ONE dv
+    dir), and build the re-add entries with rows debited and the DV
     attached. Returns ``(touched, per_file, dv_path, new_entries)`` or
     None when nothing matched."""
     # bounded by design: one row per TOUCHED FILE (never row data),
@@ -2867,63 +2800,141 @@ def _drop_dv_dir(spark: SparkSession, dv_path: str) -> None:
     fs.delete(_jpath(spark, dv_path), True)
 
 
-def _delete_where_dv(
+def _predicate_dml(
     spark: SparkSession,
     root: str,
     cur: int,
     seg: dict,
     refs: list[dict],
     pred,
+    mode: str,
     changefeed: bool,
-    conflict: dict | None = None,
+    conflict: dict | None,
+    set_fn=None,
+    widen=None,
 ) -> tuple[int, int, int, int]:
-    """The merge-on-read DELETE leg: one DV-applied scan finds the
-    matched LIVE rows; their identities (plus the touched files'
-    existing DV rows) land in a fresh deletion-vector parquet via
-    :func:`_stage_dv`; the touched entries re-commit by reference."""
+    """The one predicate-DML leg behind :func:`commit_delete_where`,
+    :func:`commit_delete_keys` and :func:`commit_update_where`. Over
+    the candidate ``refs``, rows where ``pred`` IS TRUE are deleted
+    (``set_fn=None``) or replaced by ``set_fn``'s post-images (UPDATE
+    — a DELETE is an UPDATE with no post-image); rows where it is
+    FALSE or NULL stay (the ``coalesce(pred, false)`` split).
+
+    - ``mode="rewrite"`` (copy-on-write): :func:`_touched_by_predicate`
+      finds the files holding a match; they are rewritten as their
+      non-matching rows (padded through ``widen`` to an evolved
+      schema) plus the CHECKed post-images, every other file carries
+      by reference.
+    - ``mode="dv"`` (merge-on-read): one persisted DV-applied scan
+      yields the matched LIVE rows; :func:`_stage_dv` writes their
+      identities as a deletion vector and the touched entries re-add
+      by reference; post-images are the commit's only new data. A lost
+      publish drops the staged DV dir.
+
+    Returns ``(new_version, files_rewritten, files_carried,
+    rows_deleted)`` (``rows_deleted`` is 0 for a rewrite UPDATE); no
+    match is a NO-OP returning ``(cur, 0, total_files, 0)``."""
+    # carried = the WHOLE snapshot (refs may be a pruned subset)
+    noop = cur, 0, seg["total_files"], 0
     if not refs:
-        return cur, 0, 0, 0
-    live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
-    matched = live.where(F.coalesce(pred, F.lit(False)))
-    if not changefeed:
-        # column-prune the scan to predicate + identity columns
-        matched = matched.select(*_ID_COLS)
-    matched = matched.persist()
+        return noop
+    widen = widen or (lambda frame: frame)
+    cached = []
+    dv_path = new_entries = keep = None
     try:
-        staged = _stage_dv(spark, root, cur, refs, matched)
-        if staged is None:
-            # carried = the WHOLE snapshot (refs may be a pruned
-            # subset — the keyed-delete path hands in candidates only)
-            return cur, 0, seg["total_files"], 0
-        touched, per_file, dv_path, new_entries = staged
-        cdf_frame = (
-            matched.drop(*_ID_COLS).withColumn(
-                "_change_type", F.lit("delete")
+        if mode == "dv":
+            matched = _snapshot_read(
+                spark, root, seg, refs, keep_identity=True
+            ).where(F.coalesce(pred, F.lit(False)))
+            if set_fn is None and not changefeed:
+                # column-prune the scan to predicate + identity columns
+                matched = matched.select(*_ID_COLS)
+            matched = matched.persist()
+            cached.append(matched)
+            staged = _stage_dv(spark, root, cur, refs, matched)
+            if staged is None:
+                return noop
+            touched, per_file, dv_path, new_entries = staged
+            pre = matched.drop(*_ID_COLS)
+        else:
+            touched = _touched_by_predicate(spark, root, seg, refs, pred)
+            if not touched:
+                return noop
+            frame = _snapshot_read(spark, root, seg, touched)
+            if changefeed:
+                frame = frame.persist()
+                cached.append(frame)
+            keep = widen(frame.where(~F.coalesce(pred, F.lit(False))))
+            pre = frame.where(pred)
+        if set_fn is None:
+            data = keep
+            cdf_frame = (
+                pre.withColumn("_change_type", F.lit("delete"))
+                if changefeed
+                else None
             )
-            if changefeed
-            else None
-        )
+        else:
+            post = set_fn(pre)
+            # CHECK only the UPDATED leg — pass-through rows passed the
+            # chain at their original write (pre_checked below); the
+            # CDF copies stay unchained (the data write runs first and
+            # aborts)
+            cons = seg.get("constraints") or {}
+            data = _enforce_constraints(post, cons) if cons else post
+            if keep is not None:
+                data = keep.unionByName(data)
+            cdf_frame = (
+                widen(pre)
+                .withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(
+                    post.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    )
+                )
+                if changefeed
+                else None
+            )
         try:
             v = _commit(
                 spark,
                 root,
-                None,
-                "delete",
+                data,
+                "delete" if set_fn is None else "update",
                 seg["stats_cols"],
+                pre_checked=True,
                 removes=_rm(touched),
                 removed_rows=_nrows(touched),
                 removed_dv=_dv_debit(touched),
                 prev=seg,
                 cdf=cdf_frame,
                 add_entries=new_entries,
+                # simple predicates classify: a racing APPEND whose
+                # stats refute the predicate re-bases this commit
+                # instead of recomputing it (see _rebase_ok
+                # kind="predicate"); keyed deletes classify as
+                # kind="pruned" on their range
                 conflict=conflict,
             )
         except RuntimeError:
-            _drop_dv_dir(spark, dv_path)
+            if dv_path is not None:
+                _drop_dv_dir(spark, dv_path)
             raise
     finally:
-        matched.unpersist()
-    return v, 0, seg["total_files"], sum(per_file.values())
+        for c in cached:
+            c.unpersist()
+    if mode == "dv":
+        return v, 0, seg["total_files"], sum(per_file.values())
+    n_deleted = 0
+    if set_fn is None:
+        # count from THIS commit's own entries (touched minus kept
+        # rows written) — rebase-proof, unlike a stale-snapshot totals
+        # diff (a re-based loser's final total also carries the
+        # winner's adds)
+        n_deleted = _nrows(touched) - sum(
+            e["rows"]
+            for e in _read_manifest(spark, root, v).get("add", [])
+        )
+    return v, len(touched), seg["total_files"] - len(touched), n_deleted
 
 
 def commit_update_where(
@@ -2936,9 +2947,10 @@ def commit_update_where(
     evolve_schema: bool = False,
 ) -> tuple[int, int, int]:
     """Predicate UPDATE as a COMMIT (Delta's ``UPDATE t SET ... WHERE
-    p``): same touched-file discovery as :func:`commit_delete_where`,
-    rewriting each touched file as (rows where p is not TRUE,
-    unchanged) ∪ (rows where p is TRUE, with ``set_exprs`` applied).
+    p``): the same leg as :func:`commit_delete_where`
+    (:func:`_predicate_dml`) with post-images, rewriting each touched
+    file as (rows where p is not TRUE, unchanged) ∪ (rows where p is
+    TRUE, with ``set_exprs`` applied).
     SQL UPDATE semantics exactly: every SET expression sees the
     PRE-update row (one simultaneous select, never sequential
     withColumn), results cast back to the column's manifest type.
@@ -2980,8 +2992,6 @@ def commit_update_where(
             list(schema.fields)
             + [_st.StructField(c, probe.schema[c].dataType) for c in unknown]
         )
-    fields = {f.name: f.dataType for f in schema.fields}
-    pred = F.expr(predicate)
 
     def apply_set(frame: DataFrame) -> DataFrame:
         # ONE select: every SET expression evaluates against the
@@ -3014,116 +3024,10 @@ def commit_update_where(
 
     # slim for the rewrite leg (stats never re-added), full for dv
     refs = _pruned_entries(spark, root, res, slim=(mode != "dv"))
-    if mode == "dv":
-        return _update_where_dv(
-            spark, root, cur, seg, refs, pred, apply_set, widen,
-            changefeed, conflict=_predicate_conflict(seg, predicate),
-        )
-    touched = _touched_by_predicate(spark, root, seg, refs, pred)
-    if not touched:
-        return cur, 0, len(refs)
-    n_kept = seg["total_files"] - len(touched)
-    touched_read = _snapshot_read(spark, root, seg, touched)
-    cached = []
-    cdf_frame = None
-    try:
-        if changefeed:
-            touched_read = touched_read.persist()
-            cached.append(touched_read)
-        unchanged = widen(
-            touched_read.where(~F.coalesce(pred, F.lit(False)))
-        )
-        pre = touched_read.where(pred)
-        post = apply_set(pre)
-        # CHECK only the UPDATED leg — unchanged rows passed the chain
-        # at their original write (pre_checked below); the CDF copies
-        # stay unchained (the data write runs first and aborts)
-        cons = seg.get("constraints") or {}
-        merged = unchanged.unionByName(
-            _enforce_constraints(post, cons) if cons else post
-        )
-        if changefeed:
-            cdf_frame = widen(pre).withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
-        v = _commit(
-            spark,
-            root,
-            merged,
-            "update",
-            seg["stats_cols"],
-            removes=_rm(touched),
-            removed_rows=_nrows(touched),
-            removed_dv=_dv_debit(touched),
-            prev=seg,
-            cdf=cdf_frame,
-            conflict=_predicate_conflict(seg, predicate),
-            pre_checked=True,
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
-    return v, len(touched), n_kept
-
-
-def _update_where_dv(
-    spark: SparkSession,
-    root: str,
-    cur: int,
-    seg: dict,
-    refs: list[dict],
-    pred,
-    apply_set,
-    widen,
-    changefeed: bool,
-    conflict: dict | None = None,
-) -> tuple[int, int, int]:
-    """The merge-on-read UPDATE leg (Delta's DV update): the matched
-    LIVE rows are DV-deleted in place and their post-images append as
-    a NEW data file in the same commit — the touched files never
-    rewrite; the commit moves O(matched rows)."""
-    if not refs:
-        return cur, 0, 0
-    live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
-    matched = live.where(F.coalesce(pred, F.lit(False))).persist()
-    try:
-        staged = _stage_dv(spark, root, cur, refs, matched)
-        if staged is None:
-            return cur, 0, len(refs)
-        touched, per_file, dv_path, new_entries = staged
-        pre = matched.drop(*_ID_COLS)
-        post = apply_set(pre)
-        cdf_frame = (
-            widen(pre).withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
-            if changefeed
-            else None
-        )
-        try:
-            v = _commit(
-                spark,
-                root,
-                post,
-                "update",
-                seg["stats_cols"],
-                removes=_rm(touched),
-                removed_rows=_nrows(touched),
-                removed_dv=_dv_debit(touched),
-                prev=seg,
-                cdf=cdf_frame,
-                add_entries=new_entries,
-                conflict=conflict,
-            )
-        except RuntimeError:
-            _drop_dv_dir(spark, dv_path)
-            raise
-    finally:
-        matched.unpersist()
-    return v, 0, seg["total_files"]
+    return _predicate_dml(
+        spark, root, cur, seg, refs, F.expr(predicate), mode, changefeed,
+        _predicate_conflict(seg, predicate), set_fn=apply_set, widen=widen,
+    )[:3]
 
 
 def _clause_flag(cond: str | None, ctx_expr) -> "F.Column":

@@ -1,9 +1,22 @@
-"""Per-ACTION job ledger: monkeypatch every PySpark action entry point
-to record (repo-frame call stack, wall time, DAGScheduler job-id delta)
-so a lifecycle query's job count decomposes into named actions. Guide
-§1: attribute before cutting. Measurement-only — never on a query path.
+"""Per-query job ledger. Each registry query runs once warm, then once
+measured; the measured run records
 
-Usage: SPARK_GRAFT_PROBE="merge_into" python scripts/job_ledger.py
+- its wall time split into build (DataFrame construction — includes
+  the embedded commit actions of the lifecycle queries), plan
+  (Catalyst analysis + optimization + physical planning of the FINAL
+  frame) and exec (collect);
+- the Spark jobs it launched end to end (DAGScheduler job-id delta);
+- per ACTION: every PySpark action entry point is monkeypatched to
+  record (repo-frame call stack, wall time, job-id delta), so a
+  lifecycle query's job count decomposes into named actions.
+
+Guide §1: decide whether a query is action-count, planning or
+execution bound, and attribute before cutting. Measurement-only —
+never on a query path.
+
+Usage: SPARK_GRAFT_PROBE="a,b,c" python scripts/job_ledger.py
+(defaults to the full registry; sf dir from SPARK_GRAFT_SF_DIR;
+SPARK_GRAFT_LEDGER_STAGES=1 also prints each job's stages).
 """
 
 from __future__ import annotations
@@ -67,12 +80,13 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = [
-        n.strip()
-        for n in os.environ.get("SPARK_GRAFT_PROBE", "merge_into").split(",")
-        if n.strip()
-    ]
     queries = entrymod.queries()
+    only = os.environ.get("SPARK_GRAFT_PROBE")
+    names = (
+        [n.strip() for n in only.split(",") if n.strip()]
+        if only
+        else list(queries)
+    )
 
     spark = get_spark("amadeus_spark_ledger")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -90,33 +104,46 @@ def main() -> None:
     out = {}
     for name in names:
         fn = queries[name]
-        # warm
+        # warm run (codegen/JIT at the probed sf)
         spark.catalog.clearCache()
         release_cached()
         LEDGER.clear()
-        fn(spark, sf_dir).collect()
+        try:
+            fn(spark, sf_dir).collect()
+        except Exception as e:
+            out[name] = {"err": repr(e)[:120]}
+            print(f"== {name}: {out[name]['err']}")
+            continue
         # measured
         spark.catalog.clearCache()
         release_cached()
         spark._jvm.System.gc()
         LEDGER.clear()
         j0, t0 = njobs(), time.perf_counter()
-        fn(spark, sf_dir).collect()
-        total_s = time.perf_counter() - t0
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df._jdf.queryExecution().executedPlan()
+        t2 = time.perf_counter()
+        df.collect()
+        t3 = time.perf_counter()
         total_j = njobs() - j0
         ledger = list(LEDGER)
         acc_j = sum(e["jobs"] for e in ledger)
         acc_s = sum(e["s"] for e in ledger)
         out[name] = {
-            "total_s": round(total_s, 3),
+            "total_s": round(t3 - t0, 3),
+            "build_s": round(t1 - t0, 3),
+            "plan_s": round(t2 - t1, 3),
+            "exec_s": round(t3 - t2, 3),
             "total_jobs": total_j,
             "ledger_jobs": acc_j,
             "ledger_s": round(acc_s, 3),
             "actions": ledger,
         }
-        print(f"== {name}: {total_j} jobs / {total_s:.2f}s "
-              f"(ledger: {acc_j} jobs / {acc_s:.2f}s across "
-              f"{len(ledger)} actions)")
+        print(f"== {name}: {total_j} jobs / {t3 - t0:.2f}s "
+              f"(build {t1 - t0:.2f} / plan {t2 - t1:.2f} / exec "
+              f"{t3 - t2:.2f}s; ledger: {acc_j} jobs / {acc_s:.2f}s "
+              f"across {len(ledger)} actions)", flush=True)
         # per-job stage names (what each DAGScheduler job actually ran)
         tracker = spark.sparkContext.statusTracker()
         jid = j0

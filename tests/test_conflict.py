@@ -106,6 +106,38 @@ def test_append_race_restamps_changefeed(spark, root, monkeypatch):
     assert sorted(r["k"] for r in rows) == list(range(20, 30))
 
 
+def test_merge_race_restamps_empty_changefeed(spark, root, monkeypatch):
+    """A changefeed MERGE whose matched clause fires on no row stages a
+    CDF dir holding no files (the fused write's empty leg). Re-basing
+    it over a disjoint append must re-stamp that dir through the
+    segment's explicit schema — there is no footer to infer one from."""
+    V.commit_append(
+        spark, root, _df(spark, 0, 100, "base").coalesce(1), ["k"]
+    )
+    _arm_race(
+        monkeypatch,
+        lambda: V.commit_append(
+            spark, root, _df(spark, 1000, 1010, "win").coalesce(1)
+        ),
+    )
+    src = spark.range(0, 5).selectExpr("id AS k", "1 AS v")
+    v = V.commit_merge(
+        spark,
+        root,
+        src,
+        "k",
+        matched=[
+            {"action": "update", "condition": "s.v < 0",
+             "set": {"v": "'never'"}}
+        ],
+        changefeed=True,
+    )[0]
+    assert v == 2
+    assert V._read_manifest(spark, root, 2)["rebases"] == 1
+    assert V.table_changes(spark, root, 2, 2).count() == 0
+    assert V.read_version(spark, root).where("v = 'never'").count() == 0
+
+
 def test_append_race_across_remove_all_rebases(spark, root, monkeypatch):
     """An append re-bases even over a full-rewrite OPTIMIZE: its rows
     were never part of the compacted snapshot, and the log fold replays
